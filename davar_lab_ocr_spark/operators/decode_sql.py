@@ -1,21 +1,35 @@
-"""JVM-side (whole-stage-codegen) CTC / attention decode.
+"""JVM-side CTC / attention / ACE / RFL decode, written as SQL text.
 
 The reference decodes with per-batch python/C kernels
 (ctc_converter.py:166-179, att_head.py:238-258); on Spark the same
-semantics are expressible as higher-order array functions — filter /
-transform / array_join over the id array — which keeps the entire text
-hot path inside Tungsten codegen (no python workers, no Arrow
-round-trip). Measured ~3x faster and near-linear scaling vs the
-equivalent pandas-UDF stage; the UDF variant remains in decode.py for
-kernels that genuinely need numpy.
+semantics are higher-order array functions (zip_with / filter /
+transform / array_join) over the id array, so text decode needs no
+python worker and no Arrow round-trip. On Spark 4.1.2 a projection
+that holds a lambda higher-order function runs OUTSIDE whole-stage
+codegen (the executed plan shows a bare ``Project``, not
+``*(n) Project``); the functions are interpreted per row.
+
+Each decoder is one SQL text over column names (``*_sql``), parsed once
+by ``F.expr`` (``*_col``; RFL has only the latter). Building the same
+expression node by node with ``pyspark.sql.functions`` costs one py4j
+round trip per node (tens per decoder); a ``*_sql`` text can also be
+nested inside a caller's own SQL lambda (plans/full_chain.py).
+Arguments are column names or any SQL expression text; a Column is
+accepted too and rendered to its SQL.
 
 Charset conventions match functions/text.py:
-- CTC: blank id 0, chars '0'-'9''a'-'z' at ids 1..36; keep step i iff
-  id != 0 and (i == 0 or raw id[i] != raw id[i-1]).
-- Attention: 0='[GO]', 1='[s]' (EOS), chars at 2..37; map every step,
-  truncate at the first '[s]'. (When no EOS is present we keep the
-  whole string; the reference's find()==-1 would drop the last char —
-  documented deviation, our generator always emits EOS.)
+- CTC: blank id 0, chars '0'-'9''a'-'z' at ids 1..36, ids > 36 clamp to
+  'z'; keep step i iff id > 0 and (i == 0 or raw id[i] != raw id[i-1]).
+  PAD_ID (-1) steps are never kept but still act as the predecessor of
+  the next step: this is ``ctc_decode_batch``'s semantics. It equals
+  ``ctc_decode_py`` (which stops at the first PAD) only when padding is
+  at the tail, as in every ragged [B, T] matrix.
+- Attention: 0='[GO]', 1='[s]' (EOS), chars at 2..37; drop PAD_ID,
+  map every step, truncate at the first '[s]'. (When no EOS is present
+  we keep the whole string; the reference's find()==-1 would drop the
+  last char — documented deviation, our generator always emits EOS.)
+  Equals ``attn_decode_py`` for tail padding.
+- Null or empty ids decode to ''.
 """
 
 from __future__ import annotations
@@ -23,78 +37,86 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from ..functions.text import CHARS36
+from . import sql_ref
 
 
-def _char(v) -> F.Column:
+def _char_sql(v: str) -> str:
     """charset char for id (1..36) -> substr(CHARS36, id, 1), clamped
     high like the python oracle's min(id, max_index) (-> 'z')."""
-    return F.lit(CHARS36).substr(F.least(v.cast("int"), F.lit(len(CHARS36))), F.lit(1))
+    return f"substr('{CHARS36}', least(CAST({v} AS INT), {len(CHARS36)}), 1)"
 
 
-def ctc_decode_col(ids_col) -> F.Column:
-    """Greedy CTC decode of array<int> -> string, pure JVM exprs.
-    Keeps ids > 0 only (skips blank 0 and ragged-matrix PAD_ID -1,
-    matching ctc_decode_py / ctc_decode_batch).
+def ctc_decode_sql(ids) -> str:
+    """Greedy CTC decode of array<int> -> string.
 
-    Formulated as zip_with(ids, shift(ids)) rather than the r5
-    sequence/filter over indices with three element_at probes per
-    step: the shifted-predecessor array is built once per row (concat
-    + slice are buffer copies), each step then compares two lambda
-    variables directly, and array_join's default null-skipping drops
-    the suppressed steps — one fewer array materialization and no
-    per-element bounds-checked lookups. Measured on the 240k-doc bench
-    corpus: decode sub-plan 1.39 -> 1.26 s, bitwise-identical output
-    on every region (r6)."""
-    n = F.size(ids_col)
-    # predecessor ids: [-1, ids[0], ..., ids[n-2]]; -1 never equals a
-    # kept (positive) id, so step 0 is always kept when id > 0
-    prev = F.when(
-        n > 1, F.concat(F.array(F.lit(-1)), F.slice(ids_col, 1, n - 1))
-    ).otherwise(F.transform(ids_col, lambda v: F.lit(-1)))
-    chars = F.zip_with(
-        ids_col, prev, lambda v, p: F.when((v > 0) & (v != p), _char(v))
+    zip_with(ids, predecessor ids): the predecessor array
+    [-1, ids[0], ..., ids[n-2]] is built once per row (concat + slice
+    are buffer copies), each step compares two lambda variables, and
+    array_join's null-skipping drops the suppressed steps. -1 never
+    equals a kept (positive) id, so step 0 is kept when id > 0."""
+    ids = sql_ref(ids)
+    n = f"size({ids})"
+    prev = (
+        f"CASE WHEN {n} > 1 THEN concat(array(-1), slice({ids}, 1, {n} - 1)) "
+        f"ELSE transform({ids}, c_id -> -1) END"
     )
-    return F.when(n > 0, F.array_join(chars, "")).otherwise(F.lit(""))
-
-
-def attn_decode_col(ids_col) -> F.Column:
-    """Attention decode of array<int> -> string, pure JVM exprs.
-    PAD_ID (-1) padding is dropped before mapping (the python oracle
-    stops at the first PAD)."""
-    valid = F.filter(ids_col, lambda v: v >= 0)
-    mapped = F.transform(
-        valid,
-        lambda v: F.when(v == 0, F.lit("[GO]"))
-        .when(v == 1, F.lit("[s]"))
-        .otherwise(_char(v - 1)),
+    chars = (
+        f"zip_with({ids}, {prev}, (c_id, c_prev) -> "
+        f"CASE WHEN c_id > 0 AND c_id != c_prev THEN {_char_sql('c_id')} END)"
     )
-    joined = F.array_join(mapped, "")
-    return F.coalesce(F.substring_index(joined, "[s]", 1), F.lit(""))
+    return f"CASE WHEN {n} > 0 THEN array_join({chars}, '') ELSE '' END"
 
 
-def text_decode_col(mode_col, ids_col) -> F.Column:
-    """Dispatch on mode: ctc | attn | ace | anything else -> ''."""
-    return (
-        F.when(mode_col == "ctc", ctc_decode_col(ids_col))
-        .when(mode_col == "attn", attn_decode_col(ids_col))
-        .when(mode_col == "ace", ace_decode_col(ids_col))
-        .otherwise(F.lit(""))
+def attn_decode_sql(ids) -> str:
+    """Attention decode of array<int> -> string: drop PAD_ID, map,
+    truncate at the first '[s]'."""
+    ids = sql_ref(ids)
+    mapped = (
+        f"transform(filter({ids}, a_id -> a_id >= 0), a_id -> "
+        f"CASE WHEN a_id = 0 THEN '[GO]' WHEN a_id = 1 THEN '[s]' "
+        f"ELSE {_char_sql('a_id - 1')} END)"
     )
+    return f"coalesce(substring_index(array_join({mapped}, ''), '[s]', 1), '')"
 
 
-def ace_decode_col(ids_col) -> F.Column:
+def ace_decode_sql(ids) -> str:
     """ACE decode: drop non-positive ids (blank 0 and ragged-matrix
     PAD_ID -1), map the rest to chars (ace_converter.py:107-124 —
-    chars at ids 1..36 like CTC). Never returns null: null/empty
-    input -> '' like the other decoders."""
-    kept = F.filter(ids_col, lambda v: v > 0)
-    text = F.array_join(F.transform(kept, _char), "")
-    return F.coalesce(text, F.lit(""))
+    chars at ids 1..36 like CTC). Null/empty input -> ''."""
+    ids = sql_ref(ids)
+    chars = f"transform(filter({ids}, e_id -> e_id > 0), e_id -> {_char_sql('e_id')})"
+    return f"coalesce(array_join({chars}, ''), '')"
 
 
-def rfl_length_col(counts_col) -> F.Column:
+def text_decode_sql(mode, ids) -> str:
+    """Dispatch on mode: ctc | attn | ace | anything else -> ''."""
+    mode = sql_ref(mode)
+    return (
+        f"CASE WHEN {mode} = 'ctc' THEN {ctc_decode_sql(ids)} "
+        f"WHEN {mode} = 'attn' THEN {attn_decode_sql(ids)} "
+        f"WHEN {mode} = 'ace' THEN {ace_decode_sql(ids)} ELSE '' END"
+    )
+
+
+def ctc_decode_col(ids) -> F.Column:
+    return F.expr(ctc_decode_sql(ids))
+
+
+def attn_decode_col(ids) -> F.Column:
+    return F.expr(attn_decode_sql(ids))
+
+
+def ace_decode_col(ids) -> F.Column:
+    return F.expr(ace_decode_sql(ids))
+
+
+def text_decode_col(mode, ids) -> F.Column:
+    return F.expr(text_decode_sql(mode, ids))
+
+
+def rfl_length_col(counts) -> F.Column:
     """RFL decode: predicted text length = round(sum(per-class counts))
     (rfl_converter.py:117-133). Python round() is HALF_EVEN, so use
     bround, not Spark's HALF_UP round. Null input -> 0."""
-    total = F.aggregate(counts_col, F.lit(0.0), lambda acc, v: acc + v.cast("double"))
-    return F.coalesce(F.bround(total).cast("int"), F.lit(0))
+    total = f"aggregate({sql_ref(counts)}, 0D, (acc, r_v) -> acc + CAST(r_v AS DOUBLE))"
+    return F.expr(f"coalesce(CAST(bround({total}) AS INT), 0)")

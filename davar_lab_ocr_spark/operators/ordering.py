@@ -21,6 +21,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
+from . import sql_ref
+
 
 def xycut_order(df: DataFrame, doc_col: str = "doc_id", y_col: str = "y0", x_col: str = "x0") -> DataFrame:
     """Window row_number per doc ordered by (y, x) -> 0-based offset."""
@@ -28,17 +30,12 @@ def xycut_order(df: DataFrame, doc_col: str = "doc_id", y_col: str = "y0", x_col
     return df.withColumn("offset", F.row_number().over(w) - 1)
 
 
-def sort_spans_expr(spans_unsorted_col):
+def sort_spans_expr(spans_unsorted) -> F.Column:
     """array<struct(y0,x0,...)> -> ordered spans with dense offsets,
-    pure JVM exprs (used by plans.extract)."""
-    return F.transform(
-        F.array_sort(spans_unsorted_col),
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
+    one SQL text (used by plans.extract)."""
+    return F.expr(
+        f"transform(array_sort({sql_ref(spans_unsorted)}), (s, i) -> named_struct("
+        "'kind', s.kind, 'text', s.text, 'media_ref', s.media_ref, 'offset', CAST(i AS INT)))"
     )
 
 

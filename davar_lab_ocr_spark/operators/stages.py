@@ -46,14 +46,14 @@ def _explode_regions(df):
 def _classify_kind(df, scores_col: str = "kind_scores"):
     from ..plans.extract import classify_kind
 
-    return df.withColumn("kind", classify_kind(F.col(scores_col)))
+    return df.withColumn("kind", classify_kind(scores_col))
 
 
 @register_stage("TextDecode")
 def _text_decode(df, mode_col: str = "mode", ids_col: str = "pred_ids"):
     from .decode_sql import text_decode_col
 
-    return df.withColumn("text", text_decode_col(F.col(mode_col), F.col(ids_col)))
+    return df.withColumn("text", text_decode_col(mode_col, ids_col))
 
 
 @register_stage("LGPMA")

@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..operators.decode_sql import text_decode_col
+from ..operators.decode_sql import text_decode_sql
 from ..operators.detection import east_decode_stage
 
 
@@ -50,42 +50,27 @@ def extract_from_maps(det: DataFrame, thres_text: float = 0.8, nms_thres: float 
         ),
     )
 
-    # reading order: sort quads by (y0, x0) of their first corner band
-    sorted_quads = F.array_sort(
-        F.transform(
-            "quads",
-            lambda q: F.struct(
-                F.array_min(F.filter(q["points"], lambda _v, i: i % 2 == 1)).alias("y0"),
-                F.array_min(F.filter(q["points"], lambda _v, i: i % 2 == 0)).alias("x0"),
-                q["points"].alias("points"),
-                q["conf"].alias("conf"),
-            ),
-        )
+    # reading order: sort quads by (y0, x0) of their first corner band,
+    # then a positional zip with the (reading-ordered) recognizer
+    # payloads — a per-doc JVM op, the detect->recognize join never
+    # shuffles — and dense offsets. One SQL text: the decoder nests
+    # inside the zip lambda as text too.
+    sorted_quads = (
+        "array_sort(transform(quads, q -> named_struct("
+        "'y0', array_min(filter(q.points, (v, i) -> i % 2 = 1)), "
+        "'x0', array_min(filter(q.points, (v, i) -> i % 2 = 0)), "
+        "'points', q.points, 'conf', q.conf)))"
     )
-    # positional zip with the (reading-ordered) recognizer payloads:
-    # a per-doc JVM op — the detect->recognize join never shuffles
-    spans = F.zip_with(
-        sorted_quads,
-        F.col("line_payloads"),
-        lambda q, p: F.struct(
-            q["y0"].alias("y0"),
-            q["x0"].alias("x0"),
-            F.lit("text").alias("kind"),
-            text_decode_col(p["rcg_mode"], p["pred_ids"]).alias("text"),
-            q["points"].alias("points"),
-            q["conf"].alias("conf"),
-        ),
+    spans = (
+        f"zip_with({sorted_quads}, line_payloads, (q, p) -> named_struct("
+        "'y0', q.y0, 'x0', q.x0, 'kind', 'text', "
+        f"'text', {text_decode_sql('p.rcg_mode', 'p.pred_ids')}, "
+        "'points', q.points, 'conf', q.conf))"
     )
-    out = F.transform(
-        spans,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            F.lit("").alias("media_ref"),
-            i.cast("int").alias("offset"),
-            s["points"].alias("points"),
-            F.round(s["conf"], 6).alias("conf"),
-        ),
+    out = F.expr(
+        f"transform({spans}, (s, i) -> named_struct("
+        "'kind', s.kind, 'text', s.text, 'media_ref', '', 'offset', CAST(i AS INT), "
+        "'points', s.points, 'conf', round(s.conf, 6)))"
     )
     return joined.select("doc_id", out.alias("spans"), "_count_ok").drop("_count_ok")
 

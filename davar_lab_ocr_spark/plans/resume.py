@@ -1,23 +1,36 @@
-"""Snapshot-committed, resumable sink with per-partition lineage.
+"""Snapshot-committed, resumable sink with per-file lineage.
 
 The reference has no job-level resume (only model-weight checkpoints,
 inference.py:66-75); this is net-new per the north rule: the job must
 be resumable from a committed snapshot after executor/driver loss, and
-every commit carries per-partition lineage + counters.
+every commit carries lineage + counters.
 
 Without an Iceberg runtime in the sandbox we implement the same
 commit protocol on plain parquet:
 
   out_path/
     batch=<id>/            data files + _SUCCESS   (task-level commit)
-    _lineage/batch=<id>/   per-partition counters  (parquet)
+    _lineage/batch=<id>/   per-file counters       (parquet)
     _manifests/<id>.json   <- THE commit point (atomic file create,
                               written only after data+lineage land)
 
 A batch is visible iff its manifest exists — a crash mid-write leaves
 orphan files that readers never see (snapshot isolation, the
 df.write.format('iceberg') analog). Resume = left-anti join of the
-input's doc_ids against all committed batches' doc_ids.
+input's doc_ids against all committed batches' doc_ids, read as one
+fixed-schema column.
+
+One commit runs the upstream plan once and caches nothing; it makes
+two passes over data:
+
+  1. the data write, carrying a ``DataFrame.observe`` that counts
+     n_docs / n_spans / n_empty_spans inside the same job;
+  2. the lineage: the committed part files are read back (doc_id and
+     two span fields), counted per file, keyed by the file's partition
+     number, and written.
+
+The lineage sums must equal the observed totals before the manifest is
+written; if they differ the commit raises and no manifest exists.
 """
 
 from __future__ import annotations
@@ -28,7 +41,7 @@ import time
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .extract import extract
 
@@ -88,48 +101,55 @@ class SnapshotSink:
         return spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def processed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
-        df = self.read(spark)
-        return df.select("doc_id") if df is not None else None
+        """doc_id of every committed batch. A fixed one-column schema:
+        no footer reads, no schema-merge job (unlike ``read``)."""
+        paths = self.committed_paths()
+        if not paths:
+            return None
+        return spark.read.schema("doc_id string").parquet(*paths)
 
     # -- commit --------------------------------------------------------------
     def write_batch(self, docs: DataFrame, batch_id: str | None = None) -> dict:
-        """Write one snapshot: data, per-partition lineage, then the
-        manifest (the commit point). Returns the manifest."""
+        """Write one snapshot: data, per-file lineage, then the manifest
+        (the commit point). Returns the manifest.
+
+        Lineage has one row per committed part file, keyed by ``_part``,
+        the write task's partition number in the file name. AQE sizes
+        the write's partitions, so a small batch may coalesce into one
+        file (4 shuffle partitions -> 1 file at a few thousand docs)."""
         batch_id = batch_id or uuid.uuid4().hex[:12]
         data_path = os.path.join(self.path, f"batch={batch_id}")
         lineage_path = os.path.join(self.path, "_lineage", f"batch={batch_id}")
 
-        # content-free span counter (SCALE.md known limit, now counted):
-        # a span with empty text AND no media ref carries no content —
-        # short-payload docs produce these silently in the full chain;
-        # the lineage row makes them visible per partition
-        n_empty = F.sum(
-            F.size(
-                F.filter(
-                    F.col("spans"),
-                    lambda s: (F.coalesce(s["text"], F.lit("")) == "")
-                    & (F.coalesce(s["media_ref"], F.lit("")) == ""),
-                )
+        written = Observation()
+        docs.observe(written, *map(F.expr, _DOC_COUNTERS)).write.mode("overwrite").parquet(
+            data_path
+        )
+
+        # one pass over the committed files; span fields beyond the two
+        # the empty-span counter needs are never read
+        per_file = (
+            docs.sparkSession.read.schema(_LINEAGE_READ_SCHEMA)
+            .parquet(data_path)
+            .selectExpr("_metadata.file_name AS file", "doc_id", "spans")
+            .groupBy("file")
+            .agg(*map(F.expr, _DOC_COUNTERS + ["min(doc_id) AS min_doc_id",
+                                                "max(doc_id) AS max_doc_id"]))
+            .selectExpr(
+                "CAST(regexp_extract(file, '^part-([0-9]+)', 1) AS INT) AS _part",
+                "file", "n_docs", "n_spans", "n_empty_spans", "min_doc_id", "max_doc_id",
             )
-        ).alias("n_empty_spans")
-        staged = docs.withColumn("_part", F.spark_partition_id()).persist()
-        try:
-            staged.drop("_part").write.mode("overwrite").parquet(data_path)
-            lineage = staged.groupBy("_part").agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                n_empty,
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
+        )
+        summed = Observation()
+        per_file.observe(summed, *map(F.expr, _LINEAGE_SUMS)).write.mode("overwrite").parquet(
+            lineage_path
+        )
+        totals, lineage_totals = _totals(written), _totals(summed)
+        if lineage_totals != totals:
+            raise RuntimeError(
+                f"batch {batch_id} not committed: lineage sums {lineage_totals} "
+                f"!= written totals {totals}"
             )
-            lineage.write.mode("overwrite").parquet(lineage_path)
-            totals = staged.agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.size("spans")).alias("n_spans"),
-                n_empty,
-            ).collect()[0]
-        finally:
-            staged.unpersist()
 
         # monotonic commit sequence (single-writer protocol, like
         # Iceberg's snapshot sequence-number): next = max committed + 1
@@ -139,9 +159,7 @@ class SnapshotSink:
             "batch_id": batch_id,
             "seq": seq,
             "committed_at": time.time(),
-            "n_docs": totals["n_docs"],
-            "n_spans": int(totals["n_spans"] or 0),
-            "n_empty_spans": int(totals["n_empty_spans"] or 0),
+            **totals,
             "data_path": data_path,
             "lineage_path": lineage_path,
         }
@@ -151,6 +169,27 @@ class SnapshotSink:
             json.dump(manifest, fh)
         os.rename(tmp, os.path.join(self.manifest_dir, f"{batch_id}.json"))
         return manifest
+
+
+# content-free span counter (SCALE.md known limit, now counted): a span
+# with empty text AND no media ref carries no content — short-payload
+# docs produce these silently in the full chain; the counter makes them
+# visible per batch and per file
+EMPTY_SPANS_SQL = (
+    "size(filter(spans, s -> coalesce(s.text, '') = '' AND coalesce(s.media_ref, '') = ''))"
+)
+_DOC_COUNTERS = [
+    "count(1) AS n_docs",
+    "sum(size(spans)) AS n_spans",
+    f"sum({EMPTY_SPANS_SQL}) AS n_empty_spans",
+]
+_LINEAGE_SUMS = [f"sum({c}) AS {c}" for c in ("n_docs", "n_spans", "n_empty_spans")]
+_LINEAGE_READ_SCHEMA = "doc_id string, spans array<struct<text:string,media_ref:string>>"
+
+
+def _totals(obs: Observation) -> dict:
+    """An observation's counters as ints (a sum over no rows is null)."""
+    return {k: int(v or 0) for k, v in obs.get.items()}
 
 
 def run_resumable_extract(

@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .extract import classify_kind
+from .extract import SCALAR_FILTER_SQL, classify_kind
 
 
 def to_split_layout(raw: DataFrame) -> DataFrame:
@@ -46,9 +46,7 @@ def extract_split(split: DataFrame) -> DataFrame:
     from ..operators.decode_sql import text_decode_col
     from ..operators.table import lgpma_stage
 
-    scalar = split.filter(
-        (~F.col("doc_id").endswith(".gif")) & (F.least("width", "height") >= 32)
-    )
+    scalar = split.filter(SCALAR_FILTER_SQL)
 
     def explode_zip(cols: list[str]):
         """posexplode-free zip of the needed parallel arrays only."""
@@ -63,8 +61,8 @@ def extract_split(split: DataFrame) -> DataFrame:
         "doc_id",
         F.col("bboxes")[1].alias("y0"),
         F.col("bboxes")[0].alias("x0"),
-        classify_kind(F.col("kind_scores")).alias("kind"),
-        text_decode_col(F.col("modes"), F.col("pred_ids")).alias("text"),
+        classify_kind("kind_scores").alias("kind"),
+        text_decode_col("modes", "pred_ids").alias("text"),
         F.col("media_refs").alias("media_ref"),
     )
 
@@ -76,7 +74,7 @@ def extract_split(split: DataFrame) -> DataFrame:
         "doc_id",
         F.col("bboxes")[1].alias("y0"),
         F.col("bboxes")[0].alias("x0"),
-        classify_kind(F.col("kind_scores")).alias("kind"),
+        classify_kind("kind_scores").alias("kind"),
         F.col("media_refs").alias("media_ref"),
         "cell_bboxes",
         "cell_texts",
@@ -92,4 +90,4 @@ def extract_split(split: DataFrame) -> DataFrame:
 
     from ..operators.ordering import sort_spans_expr
 
-    return merged.select("doc_id", sort_spans_expr(F.col("spans_unsorted")).alias("spans"))
+    return merged.select("doc_id", sort_spans_expr("spans_unsorted").alias("spans"))

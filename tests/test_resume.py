@@ -136,3 +136,81 @@ def test_empty_span_lineage_counter(spark, tmp_path):
     assert m["n_empty_spans"] == 2
     lineage = spark.read.parquet(m["lineage_path"])
     assert sum(r["n_empty_spans"] for r in lineage.collect()) == 2
+
+
+def _recount(spark, paths):
+    """(n_docs, n_spans, n_empty_spans) of parquet paths, from the rows."""
+    from davar_lab_ocr_spark.plans.resume import EMPTY_SPANS_SQL
+
+    r = spark.read.parquet(*paths).selectExpr(
+        "count(1) AS n", "sum(size(spans)) AS s", f"sum({EMPTY_SPANS_SQL}) AS e"
+    ).collect()[0]
+    return (r["n"], r["s"] or 0, r["e"] or 0)
+
+
+def test_manifest_totals_equal_recount_of_committed_files(spark, tmp_path):
+    raw_rows, _ = make_raw_corpus(40, seed=31, giant_every=13, giant_size=80)
+    m = run_resumable_extract(spark, raw_df(spark, raw_rows), str(tmp_path / "s"), batch_id="t")
+    got = (m["n_docs"], m["n_spans"], m["n_empty_spans"])
+    assert got == _recount(spark, [m["data_path"]])
+    assert m["n_docs"] > 0
+
+
+def test_each_lineage_row_equals_recount_of_its_part_file(spark, tmp_path):
+    from davar_lab_ocr_spark.plans.extract import extract
+
+    raw_rows, _ = make_raw_corpus(40, seed=32, giant_every=0)
+    docs = extract(raw_df(spark, raw_rows)).repartition(3)
+    m = SnapshotSink(str(tmp_path / "s")).write_batch(docs, batch_id="p")
+    rows = spark.read.parquet(m["lineage_path"]).collect()
+    files = sorted(f for f in os.listdir(m["data_path"]) if f.endswith(".parquet"))
+    assert sorted(r["file"] for r in rows) == files and len(files) == 3
+    for r in rows:
+        path = os.path.join(m["data_path"], r["file"])
+        assert (r["n_docs"], r["n_spans"], r["n_empty_spans"]) == _recount(spark, [path])
+        ids = [x["doc_id"] for x in spark.read.parquet(path).select("doc_id").collect()]
+        assert (r["min_doc_id"], r["max_doc_id"]) == (min(ids), max(ids))
+        assert r["_part"] == int(r["file"].split("-")[1])
+
+
+def test_zero_doc_commit_has_zero_totals_and_no_lineage_rows(spark, tmp_path):
+    out = str(tmp_path / "s")
+    raw_rows, _ = make_raw_corpus(10, seed=33, giant_every=0)
+    full = raw_df(spark, raw_rows)
+    run_resumable_extract(spark, full, out, batch_id="a")
+    m = run_resumable_extract(spark, full, out, batch_id="b")
+    assert (m["n_docs"], m["n_spans"], m["n_empty_spans"]) == (0, 0, 0)
+    assert spark.read.parquet(m["lineage_path"]).count() == 0
+    assert [b["batch_id"] for b in SnapshotSink(out).history()] == ["a", "b"]
+
+
+def test_commit_caches_nothing_and_runs_at_most_six_jobs(spark, tmp_path):
+    out = str(tmp_path / "s")
+    raw_rows, _ = make_raw_corpus(10, seed=9, giant_every=0)
+    full = raw_df(spark, raw_rows)
+    run_resumable_extract(spark, full.filter(F.col("doc_id") < "doc-9-0000005"), out, batch_id="a")
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-commit-jobs", "one resumable commit")
+    try:
+        m = run_resumable_extract(spark, full, out, batch_id="b")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m["n_docs"] > 0
+    assert sc._jsc.getPersistentRDDs().isEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("resume-commit-jobs")) <= 6
+
+
+def test_lineage_mismatch_raises_and_commits_nothing(spark, tmp_path, monkeypatch):
+    import pytest
+
+    from davar_lab_ocr_spark.plans import resume
+
+    off_by_one = ["sum(n_docs) + 1 AS n_docs", "sum(n_spans) AS n_spans",
+                  "sum(n_empty_spans) AS n_empty_spans"]
+    monkeypatch.setattr(resume, "_LINEAGE_SUMS", off_by_one)
+    raw_rows, _ = make_raw_corpus(10, seed=34, giant_every=0)
+    out = str(tmp_path / "s")
+    with pytest.raises(RuntimeError, match="not committed"):
+        run_resumable_extract(spark, raw_df(spark, raw_rows), out, batch_id="m")
+    sink = SnapshotSink(out)
+    assert sink.committed_batches() == [] and sink.read(spark) is None

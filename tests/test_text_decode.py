@@ -75,8 +75,6 @@ def test_encoders_roundtrip():
 
 
 def test_ace_and_rfl_sql_decoders(spark):
-    import pyspark.sql.functions as F
-
     from davar_lab_ocr_spark.operators.decode_sql import (
         ace_decode_col,
         rfl_length_col,
@@ -89,8 +87,8 @@ def test_ace_and_rfl_sql_decoders(spark):
         "ids array<int>, counts array<double>",
     )
     out = df.select(
-        ace_decode_col(F.col("ids")).alias("txt"),
-        rfl_length_col(F.col("counts")).alias("n"),
+        ace_decode_col("ids").alias("txt"),
+        rfl_length_col("counts").alias("n"),
     ).collect()
     # ids 11,12,15 -> chars at CHARS36[10],[11],[14] = 'a','b','e'
     assert (out[0]["txt"], out[0]["n"]) == ("abe", 3)
@@ -101,8 +99,6 @@ def test_ace_and_rfl_sql_decoders(spark):
 def test_ace_rfl_edge_cases(spark):
     """Review findings: PAD_ID handling, null-safety, HALF_EVEN rounding,
     mode dispatch."""
-    import pyspark.sql.functions as F
-
     from davar_lab_ocr_spark.operators.decode_sql import (
         ace_decode_col,
         rfl_length_col,
@@ -116,11 +112,53 @@ def test_ace_rfl_edge_cases(spark):
         "ids array<int>, counts array<double>",
     )
     out = df.select(
-        ace_decode_col(F.col("ids")).alias("txt"),
-        rfl_length_col(F.col("counts")).alias("n"),
-        text_decode_col(F.lit("ace"), F.col("ids")).alias("via_dispatch"),
+        ace_decode_col("ids").alias("txt"),
+        rfl_length_col("counts").alias("n"),
+        text_decode_col("'ace'", "ids").alias("via_dispatch"),
     ).collect()
     assert (out[0]["txt"], out[0]["n"]) == ("09", 2)
     assert (out[1]["txt"], out[1]["n"]) == ("", 0)
     assert (out[2]["txt"], out[2]["n"]) == ("z", 0)
     assert out[0]["via_dispatch"] == "09"
+
+
+def _pin_cases():
+    """Id arrays: randomized tail-padded sequences plus edge cases."""
+    rng = np.random.default_rng(29)
+    rows = []
+    for k in range(300):
+        hi = 37 if k % 2 == 0 else 38  # CTC then attention id ranges
+        seq = rng.integers(0, hi, size=rng.integers(0, 25)).tolist()
+        rows.append(seq + [PAD_ID] * int(rng.integers(0, 6)))
+    rows += [[], [0], [5, 0, 5], None, [37, 40, 40, 3, 99], [1], [ATTN_EOS, 5], [PAD_ID]]
+    return rows
+
+
+def test_sql_decoders_match_python_oracles(spark):
+    """ctc/attn decode and the mode dispatch, pinned to the python
+    oracles over tail-padded ids (null decodes to '')."""
+    from davar_lab_ocr_spark.operators.decode_sql import (
+        attn_decode_col,
+        ctc_decode_col,
+        text_decode_col,
+    )
+
+    cases = _pin_cases()
+    df = spark.createDataFrame([(i, ids) for i, ids in enumerate(cases)], "i int, ids array<int>")
+    out = df.select(
+        "i",
+        ctc_decode_col("ids").alias("ctc"),
+        attn_decode_col("ids").alias("attn"),
+        text_decode_col("'ctc'", "ids").alias("via_ctc"),
+        text_decode_col("'attn'", "ids").alias("via_attn"),
+        text_decode_col("'table'", "ids").alias("via_other"),
+    ).collect()
+    got = {r["i"]: r for r in out}
+    assert len(got) == len(cases)
+    for i, ids in enumerate(cases):
+        want_ctc = ctc_decode_py(ids or [])
+        want_attn = attn_decode_py(ids or [])
+        r = got[i]
+        assert (r["ctc"], r["via_ctc"]) == (want_ctc, want_ctc), ids
+        assert (r["attn"], r["via_attn"]) == (want_attn, want_attn), ids
+        assert r["via_other"] == "", ids

@@ -8,10 +8,15 @@ Usage: python tools/selfcheck.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this file lives in, wherever it is run from: on
+# the driver's path and, through PYTHONPATH, on the Python workers'
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

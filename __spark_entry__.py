@@ -11,6 +11,7 @@ golden-tested in tests/.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -23,6 +24,25 @@ from davar_lab_ocr_spark.operators import textstats as TS
 from davar_lab_ocr_spark.operators.textstats import PUNCT, STOPWORDS
 
 SF_DEFAULT = "/root/testdata/sf0.001"
+
+# a deployment path: the DAVAR-Lab-OCR checkout whose shipped goldens the
+# ref_det_eval ... track_mot_eval queries read; by default the directory
+# "reference" beside this checkout
+REFERENCE_ROOT = os.environ.get(
+    "DAVAR_REFERENCE_ROOT",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "reference"),
+)
+
+
+def _reference(rel: str) -> str:
+    """Path of ``rel`` inside REFERENCE_ROOT; one clear error if absent."""
+    path = os.path.join(REFERENCE_ROOT, rel)
+    if not os.path.exists(path):
+        raise FileNotFoundError(
+            f"reference checkout file not found: {path} "
+            "(set DAVAR_REFERENCE_ROOT to a DAVAR-Lab-OCR checkout)"
+        )
+    return path
 
 # SQL-literal-safe punctuation set (single quote doubled for SQL)
 _PUNCT_SQL = PUNCT.replace("'", "''")
@@ -702,10 +722,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             read_eval_archive,
         )
 
-        gtz = "/root/reference/demo/text_detection/evaluation/gt/total-text-gt.zip"
-        pdz = (
-            "/root/reference/demo/text_detection/evaluation/pred/"
-            "pred_tp_det_r50_tt_e25-45b1f5cf.zip"
+        gtz = _reference("demo/text_detection/evaluation/gt/total-text-gt.zip")
+        pdz = _reference(
+            "demo/text_detection/evaluation/pred/pred_tp_det_r50_tt_e25-45b1f5cf.zip"
         )
         pairs = eval_archive_pairs(spark, gtz, pdz)
         sums = M.det_match_stage(pairs).agg(
@@ -736,13 +755,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # curved 14-point outlines + 387 real '###' ignore polygons
         from davar_lab_ocr_spark.sources.datalist import eval_archive_pairs
 
-        gtz = (
-            "/root/reference/demo/text_detection/evaluation/gt/"
-            "gt_ctw1500_det_with_ignore.zip"
+        gtz = _reference(
+            "demo/text_detection/evaluation/gt/gt_ctw1500_det_with_ignore.zip"
         )
-        pdz = (
-            "/root/reference/demo/text_detection/evaluation/pred/"
-            "pred_tp_det_r50_ctw-c1bf44e7.zip"
+        pdz = _reference(
+            "demo/text_detection/evaluation/pred/pred_tp_det_r50_ctw-c1bf44e7.zip"
         )
         sums = M.det_match_stage(eval_archive_pairs(spark, gtz, pdz)).agg(
             F.sum("matched").alias("m"),
@@ -768,8 +785,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pairs = eval_archive_pairs(
             spark,
-            "/root/reference/demo/text_spotting/evaluation/gts/gt-icdar2013.zip",
-            "/root/reference/demo/text_spotting/evaluation/preds/mango_r50_ic13_none.zip",
+            _reference("demo/text_spotting/evaluation/gts/gt-icdar2013.zip"),
+            _reference("demo/text_spotting/evaluation/preds/mango_r50_ic13_none.zip"),
             gt_id_strip="^gt_",
         )
         row = M.e2e_hmean(
@@ -804,16 +821,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from davar_lab_ocr_spark.sources.datalist import read_eval_archive
 
-        base = "/root/reference/demo/text_spotting/evaluation/"
+        base = "demo/text_spotting/evaluation/"
         gt = read_eval_archive(
-            spark, base + "gts/gt-icdar2013.zip", has_conf=False
+            spark, _reference(base + "gts/gt-icdar2013.zip"), has_conf=False
         ).withColumn("doc_id", F.regexp_replace("doc_id", "^gt_", ""))
         pred = read_eval_archive(
-            spark, base + "preds/mango_r50_ic13_none.zip", has_conf=False
+            spark, _reference(base + "preds/mango_r50_ic13_none.zip"), has_conf=False
         )
         lex = spark.createDataFrame(
             read_strong_lexicons(
-                base + "lexicons/icdar2013/strong_lexicon.zip"
+                _reference(base + "lexicons/icdar2013/strong_lexicon.zip")
             ),
             "doc_id string, words array<string>",
         )
@@ -859,15 +876,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from davar_lab_ocr_spark.sources.datalist import read_eval_archive
 
-        base = "/root/reference/demo/text_spotting/evaluation/"
+        base = "demo/text_spotting/evaluation/"
         gt = read_eval_archive(
-            spark, base + "gts/gt-icdar2013.zip", has_conf=False
+            spark, _reference(base + "gts/gt-icdar2013.zip"), has_conf=False
         ).withColumn("doc_id", F.regexp_replace("doc_id", "^gt_", ""))
         pred = read_eval_archive(
-            spark, base + "preds/mango_r50_ic13_none.zip", has_conf=False
+            spark, _reference(base + "preds/mango_r50_ic13_none.zip"), has_conf=False
         )
         weak = read_lexicon_txt(
-            base + "lexicons/icdar2013/ch2_test_vocabulary.txt"
+            _reference(base + "lexicons/icdar2013/ch2_test_vocabulary.txt")
         )
         pred = lexicon_correct_stage(pred, words=weak)
         gtg = gt.groupBy("doc_id").agg(
@@ -907,7 +924,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from davar_lab_ocr_spark.sources.datalist import read_nlp_datalist
 
         df = read_nlp_datalist(
-            spark, "/root/reference/demo/ner/data/CoNLL2003/Datalist/test.json"
+            spark, _reference("demo/ner/data/CoNLL2003/Datalist/test.json")
         )
         return (
             ner_decode_stage(df)
@@ -1067,9 +1084,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from davar_lab_ocr_spark.sources.datalist import read_track_results
 
-        pred_file = (
-            "/root/reference/demo/videotext/evaluation/pred/"
-            "IC15_pred_recommder_result.json"
+        pred_file = _reference(
+            "demo/videotext/evaluation/pred/IC15_pred_recommder_result.json"
         )
         raw = _json.loads(open(pred_file, "rb").read().decode("utf-8"))
         gt_rows = []
@@ -1109,9 +1125,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from davar_lab_ocr_spark.sources.datalist import read_track_results
 
-        pred_file = (
-            "/root/reference/demo/videotext/evaluation/pred/"
-            "IC15_pred_recommder_result.json"
+        pred_file = _reference(
+            "demo/videotext/evaluation/pred/IC15_pred_recommder_result.json"
         )
         raw = _json.loads(open(pred_file, "rb").read().decode("utf-8"))
         gt_rows = []
@@ -1148,9 +1163,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from davar_lab_ocr_spark.sources.datalist import read_track_results
 
-        pred_file = (
-            "/root/reference/demo/videotext/evaluation/pred/"
-            "IC15_pred_recommder_result.json"
+        pred_file = _reference(
+            "demo/videotext/evaluation/pred/IC15_pred_recommder_result.json"
         )
         raw = _json.loads(open(pred_file, "rb").read().decode("utf-8"))
         gt_rows = []

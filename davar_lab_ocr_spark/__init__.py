@@ -23,3 +23,10 @@ Subpackages:
 """
 
 __version__ = "0.1.0"
+
+from davar_lab_ocr_spark import pyworker as _pyworker
+
+# in a Spark Python worker, stop every task from re-reading the import
+# archives (see pyworker); the driver is left alone
+if _pyworker.needed():
+    _pyworker.install()

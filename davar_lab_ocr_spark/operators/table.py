@@ -12,10 +12,12 @@ detector classes, so row-0 = header is the documented stand-in.
 
 Exposed as:
 - ``recover_table_html``: per-table pure function (numpy; runs inside
-  the decode batch UDF);
+  ``table_html_udf``, the pandas_udf of the flagship extract, and
+  ``lgpma_stage``);
 - ``ocr_result_matching``: OCR line -> cell assignment with the exact
   max-IoU >= 0.75 / y-sort / '%'-'-' merge rule (post_lgpma.py:241-288);
-- ``lgpma_stage``: applyInPandas stage over a table-rows DataFrame.
+- ``table_html_udf``: pandas_udf (cell_bboxes, cell_texts) -> html;
+- ``lgpma_stage``: mapInArrow stage over a table-rows DataFrame.
 """
 
 from __future__ import annotations

@@ -113,11 +113,17 @@ class SnapshotSink:
         """Write one snapshot: data, per-file lineage, then the manifest
         (the commit point). Returns the manifest.
 
+        A committed ``batch_id`` is never replaced: reusing one raises
+        ``FileExistsError`` before anything is written.
+
         Lineage has one row per committed part file, keyed by ``_part``,
         the write task's partition number in the file name. AQE sizes
         the write's partitions, so a small batch may coalesce into one
         file (4 shuffle partitions -> 1 file at a few thousand docs)."""
         batch_id = batch_id or uuid.uuid4().hex[:12]
+        manifest_path = os.path.join(self.manifest_dir, f"{batch_id}.json")
+        if os.path.exists(manifest_path):
+            raise FileExistsError(f"batch {batch_id!r} is already committed: {manifest_path}")
         data_path = os.path.join(self.path, f"batch={batch_id}")
         lineage_path = os.path.join(self.path, "_lineage", f"batch={batch_id}")
 
@@ -167,7 +173,7 @@ class SnapshotSink:
         tmp = os.path.join(self.manifest_dir, f".{batch_id}.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
-        os.rename(tmp, os.path.join(self.manifest_dir, f"{batch_id}.json"))
+        os.rename(tmp, manifest_path)
         return manifest
 
 

@@ -214,3 +214,21 @@ def test_lineage_mismatch_raises_and_commits_nothing(spark, tmp_path, monkeypatc
         run_resumable_extract(spark, raw_df(spark, raw_rows), out, batch_id="m")
     sink = SnapshotSink(out)
     assert sink.committed_batches() == [] and sink.read(spark) is None
+
+
+def test_reused_batch_id_raises_and_keeps_the_committed_batch(spark, tmp_path):
+    import pytest
+
+    out = str(tmp_path / "s")
+    raw_rows, _ = make_raw_corpus(20, seed=35, giant_every=0)
+    full = raw_df(spark, raw_rows)
+    first = run_resumable_extract(spark, full.filter(F.col("doc_id") < "doc-35-0000010"), out,
+                                  batch_id="a")
+    sink = SnapshotSink(out)
+    before = _spans_map(sink.read(spark))
+    files = sorted(os.listdir(first["data_path"]))
+    with pytest.raises(FileExistsError, match="already committed"):
+        run_resumable_extract(spark, full, out, batch_id="a")
+    assert sink.history() == [first]
+    assert sorted(os.listdir(first["data_path"])) == files
+    assert _spans_map(sink.read(spark)) == before and len(before) == first["n_docs"] == 10

@@ -33,7 +33,10 @@ def main() -> None:
     ap.add_argument("--input", help="raw_documents parquet path")
     ap.add_argument("--synthetic", type=int, default=0, help="generate N synthetic docs instead")
     ap.add_argument("--output", required=True, help="snapshot sink path")
-    ap.add_argument("--batch-id", default=None)
+    ap.add_argument(
+        "--batch-id", default=None, help="id of the new snapshot (default: random); "
+        "an id already committed is refused"
+    )
     ap.add_argument("--salt-buckets", type=int, default=1)
     args = ap.parse_args()
 
